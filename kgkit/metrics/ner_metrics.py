@@ -38,6 +38,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgkit.plans.materialize import fanout, released
+
 FAILURE = -1.0
 
 # input token-stream shape shared by all entry points:
@@ -580,13 +582,16 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     with −1 propagated), and entity per-class ('ind') rows carry NULL
     macro because the reference's per-class dict has no macro keys.
 
-    The input stream is persisted for the duration of the fan-out
-    (five union branches whose lineages all reach the word-level UDF
-    source; the upstream lambda plans defeat ReusedExchange
-    canonicalization — CLAUDE.md), the tiny result is materialized
-    eagerly (localCheckpoint), and the input cache is RELEASED before
-    returning — round 3 leaked one MEMORY_AND_DISK frame per call."""
-    from pyspark import StorageLevel
+    The input stream is a ``fanout`` for the duration of the call (both
+    statistic jobs read it, and its lineage reaches the word-level UDF
+    source); the tiny result is materialized eagerly (localCheckpoint)
+    so the input cache is released before returning."""
+    with released():
+        return _fanout_union(fanout(df), scheme).localCheckpoint()
+
+
+def _fanout_union(df: DataFrame, scheme: str) -> DataFrame:
+    """metrics_fanout_df's rows over the cached input ``df``."""
 
     def _raw_prf(tp, np_, nt, und):
         p = F.when(np_ > 0, tp / np_).otherwise(und)
@@ -613,11 +618,6 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
             F.round(fm, 6).alias("f1_macro"),
         ]
 
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()  # materialize BEFORE the fan-out: the five branches run
-    # inside one job, and concurrent tasks racing an unpopulated cache
-    # would each recompute the UDF partitions they beat the cache to
-
     # The fan-out arithmetic below operates on the two SUFFICIENT
     # STATISTICS — the token confusion (<= |labels|^2 rows) and the
     # chunk-class counts (<= |classes| rows).  Distributed, the union's
@@ -630,16 +630,20 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     # aggregation jobs plus local evaluation (guide §1.2).  The two
     # statistic jobs are independent consumers of the populated cache,
     # so they run CONCURRENTLY (guide §2.6 — the smaller job back-fills
-    # the larger one's straggler tail instead of waiting for it).
+    # the larger one's straggler tail instead of waiting for it).  The
+    # job threads inherit the caller's job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     from kgkit.sources.localrel import values_df
 
     spark = df.sparkSession
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        conf_fut = pool.submit(lambda: token_confusion(df).collect())
+        conf_fut = pool.submit(inherit(lambda: token_confusion(df).collect()))
         counts_fut = pool.submit(
-            lambda: entity_class_counts(df, scheme).collect())
+            inherit(lambda: entity_class_counts(df, scheme).collect()))
         conf_rows = conf_fut.result()
         counts_rows = counts_fut.result()
     conf = values_df(
@@ -761,14 +765,8 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
         null_d.alias("precision_macro"), null_d.alias("recall_macro"),
         null_d.alias("f1_macro"),
     )
-    out = tok_all.unionByName(tok_fil).unionByName(tok_cls) \
+    return tok_all.unionByName(tok_fil).unionByName(tok_cls) \
         .unionByName(ent_fil).unionByName(ent_cls)
-    # the result is ≤ 3 + |labels| + |classes| rows: materialize it
-    # eagerly so the big persisted input can be released NOW instead of
-    # leaking one cached frame per call for the session's lifetime
-    out = out.localCheckpoint()
-    df.unpersist()
-    return out
 
 
 def classification_report(

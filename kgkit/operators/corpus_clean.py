@@ -32,6 +32,8 @@ from typing import Dict, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgkit.plans.materialize import released
+
 
 def _boundary(df: DataFrame) -> DataFrame:
     """Materialize a stage boundary AND cut the logical lineage.
@@ -50,8 +52,7 @@ def _boundary(df: DataFrame) -> DataFrame:
     (documented, same as the streaming indexes): localCheckpoint
     blocks are executor-local — a lost executor re-fails the job
     rather than recomputing, acceptable for a single composed batch
-    job; block cleanup is GC-driven (the unpersist() calls below are
-    advisory for the plain-persist case and harmless here)."""
+    job; block cleanup is GC-driven."""
     return df.localCheckpoint()
 
 
@@ -138,47 +139,44 @@ def clean_corpus(
     stats["after_url_dedup"] = cur.count()
 
     # -- 2. exact dedup ---------------------------------------------------
-    prev = cur
     cur = _boundary(keep_min_id(cur, F.md5("text")))
     stats["after_exact_dedup"] = cur.count()
-    prev.unpersist()
 
     # -- 3. near-dup removal ----------------------------------------------
     if near_dup_strategy not in ("greedy", "clusters"):
         raise ValueError(f"unknown near_dup_strategy {near_dup_strategy!r}")
-    pairs = minhash_near_dups(
-        cur.select("doc_id", "text"), threshold=near_dup_threshold
-    )
-    if near_dup_strategy == "clusters":
-        from kgkit.operators.dedup import dup_clusters
-
-        drop = (
-            dup_clusters(pairs)
-            .filter(F.col("doc_id") != F.col("canonical_id"))
-            .select("doc_id")
+    # the near-dup caches read a checkpointed input, so no later call
+    # can reuse them: release them once the boundary has materialized
+    with released():
+        pairs = minhash_near_dups(
+            cur.select("doc_id", "text"), threshold=near_dup_threshold
         )
-    else:
-        drop = pairs.select(
-            F.greatest("doc_a", "doc_b").alias("doc_id")
-        ).distinct()
-    prev = cur
-    # no broadcast hint: the drop list is usually tiny but is NOT
-    # bounded (a heavily-mirrored crawl can shed millions of ids) —
-    # AQE picks broadcast when the built side is actually small
-    cur = _boundary(cur.join(drop, "doc_id", "left_anti"))
+        if near_dup_strategy == "clusters":
+            from kgkit.operators.dedup import dup_clusters
+
+            drop = (
+                dup_clusters(pairs)
+                .filter(F.col("doc_id") != F.col("canonical_id"))
+                .select("doc_id")
+            )
+        else:
+            drop = pairs.select(
+                F.greatest("doc_a", "doc_b").alias("doc_id")
+            ).distinct()
+        # no broadcast hint: the drop list is usually tiny but is NOT
+        # bounded (a heavily-mirrored crawl can shed millions of ids) —
+        # AQE picks broadcast when the built side is actually small
+        cur = _boundary(cur.join(drop, "doc_id", "left_anti"))
     stats["after_near_dedup"] = cur.count()
-    prev.unpersist()
 
     # -- 4. quality filter -------------------------------------------------
     q = gopher_quality(
         cur.select("doc_id", "text"), **(quality_kwargs or {})
     ).select("doc_id", "keep")
-    prev = cur
     cur = _boundary(
         cur.join(q, "doc_id").filter(F.col("keep") == 1).drop("keep")
     )
     stats["after_quality"] = cur.count()
-    prev.unpersist()
 
     boundaries = [
         ("input", "after_url_dedup", "dropped_url_dedup"),
@@ -196,10 +194,8 @@ def clean_corpus(
             .filter(F.col("keep") == 1)
             .select("doc_id")
         )
-        prev = cur
         cur = _boundary(cur.join(keep, "doc_id", "left_semi"))
         stats["after_clf"] = cur.count()
-        prev.unpersist()
         boundaries.append(("after_quality", "after_clf", "dropped_clf"))
 
     # -- 6. benchmark decontamination (optional, LAST: eval overlap
@@ -207,7 +203,6 @@ def clean_corpus(
     if benchmarks is not None:
         from kgkit.operators.dedup import decontaminate
 
-        prev = cur
         _, report = decontaminate(
             cur.select("doc_id", "text"), benchmarks, n=decontaminate_n
         )
@@ -226,7 +221,6 @@ def clean_corpus(
             for r in report.orderBy(F.desc("n_hits"), "doc_id")
             .limit(5).collect()
         ]
-        prev.unpersist()
         boundaries.append(
             (last, "after_decontamination", "dropped_contaminated")
         )

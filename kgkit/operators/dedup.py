@@ -37,10 +37,10 @@ from __future__ import annotations
 
 from typing import Tuple
 
-
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgkit.plans.materialize import fanout
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -154,7 +154,7 @@ def _cap_buckets(band_table: DataFrame, max_bucket: int,
     This replaces the former full-row window count, which shuffled and
     sorted every band row by the bucket key just to annotate sizes.
     The helper scans ``band_table`` twice (sizes + probe), so callers
-    persist it first when its lineage is expensive — every caller in
+    ``fanout`` it first when its lineage is expensive — every caller in
     this repo does.  The observation rides the sizes aggregate: the
     same (buckets_dropped, band_rows_dropped) values, without the old
     row_number marker trick."""
@@ -179,26 +179,18 @@ def _cap_buckets(band_table: DataFrame, max_bucket: int,
 
 
 def candidate_pairs(band_table: DataFrame, max_bucket: int = 1000,
-                    observation=None, persist: bool = True) -> DataFrame:
+                    observation=None) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one band bucket.
     The self-join is keyed on (band_idx, band_hash) — colliding docs
     only; buckets larger than ``max_bucket`` are dropped entirely (see
     ``_cap_buckets``; ``observation`` surfaces the dropped mass).
 
-    The band table is repartitioned by the bucket key and persisted
-    BEFORE capping: its lineage (minhash HOF lambdas) does not
-    canonicalize into a ReusedExchange, so without the persist the
-    cap's sizes aggregate and both join sides would recompute the
-    signatures — and the cached key-partitioning is exactly what the
-    sizes groupBy and the self-join require, so neither adds an
-    exchange (one shuffle of the band table total)."""
-    if persist:
-        from pyspark import StorageLevel
-
-        band_table = band_table.repartition("band_idx", "band_hash").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        band_table.count()  # populate eagerly (the fan-out discipline)
+    The band table is repartitioned by the bucket key and cached
+    (``fanout``) BEFORE capping: the cap's sizes aggregate and both
+    join sides read it, and the cached key-partitioning is exactly what
+    they require, so neither adds an exchange (one shuffle of the band
+    table total)."""
+    band_table = fanout(band_table.repartition("band_idx", "band_hash"))
     capped = _cap_buckets(band_table, max_bucket, observation)
     a = capped.select(
         F.col("doc_id").alias("doc_a"), "band_idx", "band_hash"
@@ -241,25 +233,16 @@ def minhash_near_dups(
     bands: int = 4,
     rows: int = 2,
     threshold: float = 0.5,
-    persist: bool = True,
     max_bucket: int = 1000,
     observation=None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: (doc_a, doc_b, jaccard) near-dup pairs.
 
-    ``shingled`` feeds both the signature path and the exact-Jaccard
-    verify (twice, as both join sides); persist avoids re-running the
-    shingling HOFs 3x (no ReusedExchange for lambda plans).
-    ``max_bucket``/``observation`` are the boilerplate-bucket skew cap
-    and its dropped-mass reporting (see ``candidate_pairs``)."""
-    shingled = with_shingles(docs)
-    if persist:
-        from pyspark import StorageLevel
-
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-        shingled.count()  # eager: three consumers (signature + both
-        # verify sides) otherwise race the unpopulated cache and re-run
-        # the shingling HOFs (the assemble_triples discipline)
+    ``shingled`` feeds the signature path and both exact-Jaccard verify
+    sides, so it is a ``fanout``.  ``max_bucket``/``observation`` are
+    the boilerplate-bucket skew cap and its dropped-mass reporting (see
+    ``candidate_pairs``)."""
+    shingled = fanout(with_shingles(docs))
     bandt = lsh_band_table(minhash_signature(shingled, k), bands, rows)
     pairs = candidate_pairs(bandt, max_bucket=max_bucket,
                             observation=observation)
@@ -349,7 +332,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
     max_df: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold via an inverted-index
     self-join on shingles.  ``max_df`` drops shingles occurring in more
@@ -358,19 +340,9 @@ def ngram_jaccard_pairs(
     dominate the join — the standard skew guard for this operator.
 
     The exploded (doc_id, shingle) index fans out four ways (df counts,
-    both join sides, per-doc sizes); HOF-lambda plans don't canonicalize
-    into a ReusedExchange (CLAUDE.md), so without ``persist`` the
-    split+md5 shingling recomputes 4x.  MEMORY_AND_DISK keeps the scale
-    path spill-safe."""
+    both join sides, per-doc sizes), so it is a ``fanout``."""
     shingled = with_shingles(docs, n)
-    ex = shingled.select("doc_id", F.explode("sh").alias("s"))
-    if persist:
-        from pyspark import StorageLevel
-
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        ex.count()  # eager: four consumers (df counts, both join
-        # sides, per-doc sizes) otherwise race the unpopulated cache
-        # and re-run the shingling (the assemble_triples discipline)
+    ex = fanout(shingled.select("doc_id", F.explode("sh").alias("s")))
     df_counts = ex.groupBy("s").agg(F.count("*").alias("df_"))
     kept = ex.join(df_counts.filter(F.col("df_") <= max_df), "s").select("doc_id", "s")
 
@@ -382,7 +354,7 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    # per-doc shingle counts derived from the SAME persisted index (sh
+    # per-doc shingle counts derived from the SAME cached index (sh
     # is already distinct per doc), not a second shingling pass
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     return (
@@ -414,7 +386,6 @@ def incremental_near_dups(
     bands: int = 4,
     rows: int = 2,
     threshold: float = 0.5,
-    persist: bool = True,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """(corpus_doc_id, new_doc_id, jaccard) — near-dups of a NEW batch
@@ -432,25 +403,15 @@ def incremental_near_dups(
     (the side that can be boilerplate-degenerate at 10^12 docs); each
     kept corpus bucket then contributes at most max_bucket pairs per
     colliding batch row, so no bucket goes quadratic."""
-    sh_c = with_shingles(corpus)
-    sh_b = with_shingles(batch)
-    if persist:
-        from pyspark import StorageLevel
-
-        sh_c = sh_c.persist(StorageLevel.MEMORY_AND_DISK)
-        sh_c.count()  # eager: signature path + verify side (the
-        # fan-out discipline)
-        sh_b = sh_b.persist(StorageLevel.MEMORY_AND_DISK)
-        sh_b.count()
-    bands_c = lsh_band_table(minhash_signature(sh_c, k), bands, rows)
-    if persist:
-        # the cap scans its input twice (sizes + probe): persist the
-        # corpus band table, key-partitioned so the sizes aggregate
-        # needs no exchange
-        bands_c = bands_c.repartition("band_idx", "band_hash").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        bands_c.count()
+    # each shingled side feeds its signature path and its verify side;
+    # the cap scans the corpus band table twice (sizes + probe), and
+    # its key partitioning spares the sizes aggregate an exchange
+    sh_c = fanout(with_shingles(corpus))
+    sh_b = fanout(with_shingles(batch))
+    bands_c = fanout(
+        lsh_band_table(minhash_signature(sh_c, k), bands, rows)
+        .repartition("band_idx", "band_hash")
+    )
     bt_c = _cap_buckets(bands_c, max_bucket).select(
         F.col("doc_id").alias("corpus_doc_id"), "band_idx", "band_hash"
     )
@@ -491,10 +452,10 @@ def winnow_fingerprints(docs: DataFrame, k: int = 16, window: int = 8) -> DataFr
     7-hex-prefix int, the shingle fingerprint used by minhash), the
     window minimum keeps (hash, pos) structs, and array_distinct
     collapses the run-length repetition winnowing produces.  Each
-    survivor carries its k-gram BYTES (`gram` = text[pos:pos+k], the
+    survivor carries its k-gram CHARACTERS (`gram` = text[pos:pos+k], the
     exact value the 28-bit fp hashes), so pair verification compares
     grams on the candidate row instead of re-joining full document
-    text — k bytes of proxy per fingerprint rather than whole
+    text — k characters of proxy per fingerprint rather than whole
     payloads through the verify joins (guide §8)."""
     hs = F.expr(
         f"transform(sequence(0, greatest(length(text) - {k}, -1)), "
@@ -535,30 +496,22 @@ def substring_dup_pairs(
     degenerate fingerprints (a boilerplate k-gram present in every page
     would square the join), and verification is FUSED INTO THE JOIN
     KEY: candidates equi-join on (fp, gram) where ``gram`` is the
-    actual k-gram bytes carried on the fingerprint row, so a 28-bit
+    actual k-gram characters carried on the fingerprint row, so a 28-bit
     hash collision never even materializes a join-output row and no
     join back to document text is needed (guide §8: every shuffle but
-    the last moves a lightweight proxy — k bytes/row here, vs whole
+    the last moves a lightweight proxy — k characters/row here, vs whole
     documents through the former two verify joins).  The cap still
     keys on fp alone (its observed bucket sizes keep their exact
     values; gram equality implies fp equality, so (fp, gram) matches
     == byte-verified fp matches)."""
-    from pyspark import StorageLevel
-
-    # repartition by (fp, gram) + persist BEFORE capping: the winnow
-    # HOFs are the hottest primitive of this operator, and the cached
-    # key-partitioning is exactly the self-join's key — both join
+    # repartition by (fp, gram) BEFORE the fanout: the cached
+    # key-partitioning is exactly the self-join's key, so both join
     # sides ride the cache with ZERO further exchanges (measured: the
     # fp-only partitioning left the (fp, gram)-keyed SMJ re-shuffling
     # both sides).  The cap's sizes aggregate re-keys to fp, but that
     # is a partial-aggregated stream of narrow (fp, count) rows, not
     # full fingerprint rows.
-    fps = (
-        winnow_fingerprints(docs, k, window)
-        .repartition("fp", "gram")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fps.count()  # populate eagerly (the fan-out discipline)
+    fps = fanout(winnow_fingerprints(docs, k, window).repartition("fp", "gram"))
     capped = _cap_buckets(fps, max_bucket, keys=("fp",), id_col="doc_id")
     a = capped.select(F.col("doc_id").alias("doc_a"), "fp", "gram")
     b = capped.select(F.col("doc_id").alias("doc_b"), "fp", "gram")

@@ -38,13 +38,14 @@ Scale design (the plan IS the product at 100 TB):
 * The relation stream collapses via ``groupBy(subj, pred, obj)`` FIRST
   (map-side combine on short strings), and only the aggregated table —
   bounded by distinct (pair x surface), orders of magnitude below the
-  corpus — is persisted and fanned out into the marginal aggregations.
+  corpus — is materialized and fanned out into the marginal aggregations.
   Hub entities are safe: marginals are groupBy partial aggregations
   (never windows over a hub's full row set), and the entity-sized
   subj/obj marginal tables broadcast back onto the relation table.
-* The persist sits on an aggregated relation only (repo invariant);
-  like ``assemble_triples`` it is released to Spark's LRU once the
-  query's action completes.
+* The fan-out cache sits on an aggregated relation only (repo
+  invariant).  It is an eager localCheckpoint, so it cuts the deep
+  upstream lineage too; its blocks stay until a JVM GC frees them
+  (``unpersist()`` does not release a local checkpoint).
 """
 
 from __future__ import annotations
@@ -53,6 +54,8 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kgkit.plans.materialize import fanout, released
 
 # Verb-pattern relation typing — a deterministic classification of the
 # predicate surface into coarse edge types, shared VERBATIM with
@@ -229,7 +232,7 @@ def neighborhood(
     edge table against the frontier, anti-joins the visited set, and
     eagerly localCheckpoints the new layer — lineage stays O(1) and a
     round that produces an empty frontier exits early.  The edge table
-    is persisted once at graph-sized shuffle width; nothing scales
+    is a ``fanout`` released on return; nothing scales
     with the corpus, only with the graph.  Undirected mode unions the
     reversed edges (one projection, no second shuffle) rather than
     joining twice per round.
@@ -240,8 +243,8 @@ def neighborhood(
         e = e.unionByName(
             rel.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
         )
-    e = e.distinct().persist()
-    try:
+    with released():
+        e = fanout(e.distinct())
         visited = spark.createDataFrame(
             [(s, 0) for s in dict.fromkeys(seeds)],  # order-stable dedupe
             "entity string, hops int",
@@ -261,8 +264,6 @@ def neighborhood(
             visited = visited.unionByName(nxt).localCheckpoint()
             frontier = nxt.select("entity")
         return visited
-    finally:
-        e.unpersist()
 
 
 def canonical_predicates(rel: DataFrame) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgkit.operators.linking import cosine
+from kgkit.plans.materialize import fanout, released
 
 
 def hyperplanes(planes: int, dim: int) -> List[List[int]]:
@@ -164,7 +165,6 @@ def embedding_near_dups(
     dim: int = 64,
     max_bucket: int = 1000,
     observation=None,
-    persist: bool = True,
 ) -> DataFrame:
     """(vec_a, vec_b, cos) pairs above threshold, candidate-generated by
     sign-LSH buckets (identical vectors always share a bucket, so
@@ -185,23 +185,16 @@ def embedding_near_dups(
         per unit of collision probability — more planes is the banding
         lever for sign-LSH, traded against recall for *near* (not
         exact) duplicates).
-      * the bucketed frame is persisted before the self-join: the
-        hyperplane HOF lambdas do not canonicalize into a
-        ReusedExchange, so without it both join sides recompute every
-        dot product."""
+      * the bucketed frame is a key-partitioned ``fanout`` before
+        capping: the cap's two scans and both self-join sides read it,
+        so the hyperplane dot products run once and no further
+        exchange is needed."""
     from kgkit.operators.dedup import _cap_buckets
 
-    b = bucketed(embeddings.select("vec_id", "embedding"), planes, dim)
-    if persist:
-        from pyspark import StorageLevel
-
-        # persist the bucketed table key-partitioned BEFORE capping:
-        # the cap scans it twice (sizes + probe) and the hyperplane
-        # HOFs must not recompute; the cached partitioning serves the
-        # sizes aggregate and both self-join sides with no further
-        # exchange
-        b = b.repartition("bucket").persist(StorageLevel.MEMORY_AND_DISK)
-        b.count()
+    b = fanout(
+        bucketed(embeddings.select("vec_id", "embedding"), planes, dim)
+        .repartition("bucket")
+    )
     capped = _cap_buckets(
         b, max_bucket, observation, keys=("bucket",), id_col="vec_id"
     )
@@ -257,56 +250,50 @@ def kmeans_centroids(
     centroid table + one shuffle keyed (cell, pos) with map-side partial
     sums; nothing is collected to the driver.  Empty cells drop out
     (standard Lloyd degeneracy) — deterministic on both engines."""
-    from pyspark import StorageLevel
-
     spark = corpus.sparkSession
-    qc = corpus.select(
-        F.col(id_col).alias("_id"), quantize_vec(F.col(emb_col)).alias("qv")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_vecs = qc.count()  # eager populate (the fan-out discipline: the
-    # Lloyd loop consumes qc once per iteration) — and the count sizes
-    # the loop's shuffle width below
-
-    # the iteration shuffles CENTROID-UPDATE partials (n_cells x dim
-    # rows) and per-vector winners — graph-sized frames, so run the
-    # loop at graph-sized shuffle width (the connected_components
-    # discipline: log-round loops at corpus width are pure scheduler
-    # overhead); restored in the finally even on failure
-    n_parts = max(1, min(64, n_vecs // 100_000))
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        cents = qc.orderBy("_id").limit(n_cells).select(
-            F.col("_id").alias("cell"), F.col("qv").alias("cv")
-        )
-        for _ in range(iters):
-            scored = qc.crossJoin(F.broadcast(cents)).select(
-                "_id", "qv", "cell",
-                cosine(F.col("qv"), F.col("cv")).alias("ccos"),
+    with released():
+        # the Lloyd loop reads qc once per iteration
+        qc = fanout(corpus.select(
+            F.col(id_col).alias("_id"), quantize_vec(F.col(emb_col)).alias("qv")
+        ))
+        # the iteration shuffles CENTROID-UPDATE partials (n_cells x dim
+        # rows) and per-vector winners — graph-sized frames, so run the
+        # loop at graph-sized shuffle width (the connected_components
+        # discipline: log-round loops at corpus width are pure scheduler
+        # overhead); restored in the finally even on failure
+        n_parts = max(1, min(64, qc.count() // 100_000))
+        saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            cents = qc.orderBy("_id").limit(n_cells).select(
+                F.col("_id").alias("cell"), F.col("qv").alias("cv")
             )
-            w = Window.partitionBy("_id").orderBy(F.desc("ccos"), F.asc("cell"))
-            assigned = (
-                scored.withColumn("crnk", F.row_number().over(w))
-                .filter(F.col("crnk") == 1)
-                .select("qv", "cell")
-            )
-            comp = assigned.select("cell", F.posexplode("qv").alias("pos", "val"))
-            sums = comp.groupBy("cell", "pos").agg(F.sum("val").alias("s"))
-            cents = sums.groupBy("cell").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                    lambda x: x["s"],
-                ).alias("cv")
-            )
-        # centroids are n_cells tiny rows: materialize them eagerly and
-        # RELEASE the quantized-corpus cache now — returning a lazy
-        # frame over qc would leak one MEMORY_AND_DISK corpus copy per
-        # call for the session's lifetime (the metrics_fanout_df leak
-        # class) and re-run the Lloyd lineage on every downstream action
-        cents = cents.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    qc.unpersist()
+            for _ in range(iters):
+                scored = qc.crossJoin(F.broadcast(cents)).select(
+                    "_id", "qv", "cell",
+                    cosine(F.col("qv"), F.col("cv")).alias("ccos"),
+                )
+                w = Window.partitionBy("_id").orderBy(F.desc("ccos"), F.asc("cell"))
+                assigned = (
+                    scored.withColumn("crnk", F.row_number().over(w))
+                    .filter(F.col("crnk") == 1)
+                    .select("qv", "cell")
+                )
+                comp = assigned.select("cell", F.posexplode("qv").alias("pos", "val"))
+                sums = comp.groupBy("cell", "pos").agg(F.sum("val").alias("s"))
+                cents = sums.groupBy("cell").agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "s"))),
+                        lambda x: x["s"],
+                    ).alias("cv")
+                )
+            # centroids are n_cells tiny rows: materialize them eagerly
+            # so the block can release the quantized-corpus cache — a
+            # lazy frame over qc would re-run the Lloyd lineage on every
+            # downstream action
+            cents = cents.localCheckpoint()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     return cents
 
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgkit.plans.materialize import fanout
+
 
 def assemble_triples(
     linked: DataFrame,
@@ -43,14 +45,12 @@ def assemble_triples(
     """linked mentions + canonical map -> triples(subj, pred, obj, url,
     char_start, char_end, bucket).
 
-    ``persist=True`` caches the url-partitioned frame: the cached
-    partitioning satisfies BOTH branches' distribution requirements
-    (url is a prefix of the (url, entity) grouping key and is the
-    window key), so each branch reads the cache with no further
-    exchange and the upstream stage-1 UDF executes exactly once.
-    (Catalyst's ReusedExchange would serve the same purpose plan-side,
-    but the linking stage's lambda expressions defeat plan
-    canonicalization, so the reuse is made explicit here.)
+    ``persist=True`` caches the url-partitioned frame as a
+    ``materialize.fanout``: url is a prefix of the (url, entity)
+    grouping key and is the window key, so both branches read the
+    cache with no further exchange and the stage-1 UDF runs once.
+    (The linking stage's lambda expressions defeat the ReusedExchange
+    that would otherwise share the exchange plan-side.)
     """
     m = (
         linked.join(F.broadcast(canon), "entity_id", "left")
@@ -59,18 +59,7 @@ def assemble_triples(
         .repartition("url")  # the stage's ONE exchange over the mention stream
     )
     if persist:
-        from pyspark import StorageLevel
-
-        m = m.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the cache EAGERLY before the two-branch fan-out:
-        # with a lazy persist both union branches (and, downstream, the
-        # entity-counts orderBy's range-partition sampling pass) race
-        # the unpopulated cache inside one action, serializing on the
-        # block locks / re-running the stage-1 UDF lineage — measured
-        # at sf0.1: the assembled query dropped 4.0->2.5 s and
-        # kg_entity_counts 7.0->~3 s once the cache is populated first
-        # (the metrics_fanout_df discipline, guide §2.4/§5)
-        m.count()
+        m = fanout(m)
 
     page_triples = (
         m.groupBy("url", "entity")

@@ -9,6 +9,10 @@ per-partition lineage rows (stage, partition_id, rows, wall_ms, ts) to a
 
 Lineage capture is one extra narrow pass: groupBy(spark_partition_id())
 — a count-shuffle of negligible width — so it is safe at any scale.
+
+Each stage's build + write runs inside ``materialize.released()``: its
+plan reads a fresh run directory, so no later call can reuse the
+fan-out caches it made, and they are released when the write is done.
 """
 
 from __future__ import annotations
@@ -20,14 +24,15 @@ from typing import Callable, Dict, List
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgkit.plans.materialize import released
+
 
 class StageRunner:
     """Run named stages with materialize / skip-if-done / lineage."""
 
-    def __init__(self, spark: SparkSession, run_dir: str, collect_lineage: bool = True):
+    def __init__(self, spark: SparkSession, run_dir: str):
         self.spark = spark
         self.run_dir = run_dir
-        self.collect_lineage = collect_lineage
         self.executed: List[str] = []
         self.skipped: List[str] = []
 
@@ -54,12 +59,11 @@ class StageRunner:
             self.skipped.append(stage)
             return self.spark.read.parquet(out)
         t0 = time.monotonic()
-        df = build()
-        df.write.mode("overwrite").parquet(out)
+        with released():
+            build().write.mode("overwrite").parquet(out)
         wall_ms = (time.monotonic() - t0) * 1000
         result = self.spark.read.parquet(out)
-        if self.collect_lineage:
-            self._write_lineage(stage, result, wall_ms)
+        self._write_lineage(stage, result, wall_ms)
         self.executed.append(stage)
         return result
 

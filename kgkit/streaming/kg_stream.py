@@ -373,8 +373,9 @@ class IncrementalKGStream:
     def _compact(self) -> None:
         """Fold the partial-count parts into one frame each.
         localCheckpoint is eager: the folded frame is materialized
-        before any old part is released, and the union lineage is
-        truncated."""
+        before the old parts are dropped, and the union lineage is
+        truncated.  The old parts are local checkpoints too, so
+        ``unpersist()`` would not free them; a JVM GC does."""
         folded = (
             _union_all(self.count_parts)
             .groupBy("obj")
@@ -401,8 +402,6 @@ class IncrementalKGStream:
             ]
             if self.url_parts else []
         )
-        for p in self.count_parts + self.rel_parts + self.url_parts:
-            p.unpersist()
         self.count_parts = [folded]
         self.rel_parts = rel_folded
         self.url_parts = url_folded

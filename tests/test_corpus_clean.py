@@ -40,7 +40,10 @@ class TestCleanCorpus:
     def test_stagewise_drops_and_accounting(self, spark):
         from kgkit.operators.corpus_clean import clean_corpus
 
+        spark.catalog.clearCache()
         cleaned, stats = clean_corpus(_corpus(spark))
+        # the near-dup stage's fan-out caches are released at its boundary
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         kept = sorted(r["doc_id"] for r in cleaned.collect())
         # 2 lost to url-dedup, 4 to exact, 5 to near-dup, 6 to quality
         assert kept == [1, 3, 7], (kept, stats)

@@ -21,7 +21,10 @@ class TestStageRunner:
     def test_first_run_executes_all(self, spark, run_dir):
         from kgkit.plans.stages import run_kg_pipeline
 
+        spark.catalog.clearCache()
         result = run_kg_pipeline(spark, self.SF, run_dir)
+        # every stage's fan-out caches are released with its run
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert result["runner"].executed == [
             "stage1_mentions", "stage2_linked", "stage3_canonical",
             "stage4_triples", "stage4b_relations",
@@ -69,3 +72,18 @@ class TestStageRunner:
         assert {f.name for f in lineage.schema.fields} == {
             "stage", "partition_id", "rows", "wall_ms"
         }
+
+    def test_registry_rebuild_adds_no_persistent_rdd(self, spark):
+        """Registry fan-outs are session-lived on purpose: building and
+        executing the same query again is served from the cache the
+        first build made, so it adds no persistent RDD."""
+        from kgkit.queries import QUERIES
+
+        def persistent_rdds():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        q = QUERIES["dedup_ngram_jaccard"]
+        first = sorted(q(spark, self.SF).collect())
+        n_rdds = persistent_rdds()
+        assert sorted(q(spark, self.SF).collect()) == first
+        assert persistent_rdds() <= n_rdds
